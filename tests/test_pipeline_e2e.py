@@ -89,17 +89,44 @@ def test_pairwise_f1_vs_gold_labels(spark_result, small_cfg):
 def test_counters_present_and_sane(spark_result):
     res, clusters = spark_result
     c = res["counters"]
-    assert c["mentions_extracted"] > 0
-    assert c["candidates_generated"] >= c["edges_kept"]
-    assert c["pairs_scored"] > 0
+    assert c["occurrences"] > 0
+    assert c["raws"] >= c["raw_best"] > 0
+    assert c["sig_scores"] > 0
     assert c["span_invariant_violations"] == 0
-    assert len(clusters) == c["mentions_extracted"]
+    assert len(clusters) == c["occurrences"] == c["clusters"]
 
 
-def test_assignment_accuracy_vs_gold(spark_result, oracle_result, spark):
-    res, _ = spark_result
+@pytest.fixture(scope="module")
+def ranked_occurrences(corpus_spark):
+    """Every occurrence's top-k candidates (doc_id, span_idx, qid, score,
+    rank): signatures ranked by the core's own stages, fanned out to the
+    occurrences by normalized text."""
+    from pyspark.sql import functions as F
+    from wdel_spark.functions.textnorm import block_key_col, normalize_col
+    from wdel_spark.plans.pipeline import (
+        candidate_signatures, explode_mentions, prepare_kb,
+        rank_signature_scores, score_pair_sigs)
+
+    kb = prepare_kb(
+        corpus_spark["kb_aliases"], corpus_spark["entity_vectors"],
+        corpus_spark["redirects"], corpus_spark["wikimedia_filter"])
+    mentions = (
+        explode_mentions(corpus_spark["documents"])
+        .withColumn("norm_mention", normalize_col(F.col("raw")))
+        .withColumn("block_key", block_key_col(F.col("norm_mention")))
+    )
+    ranked = rank_signature_scores(
+        score_pair_sigs(candidate_signatures(mentions, kb), kb))
+    return (
+        mentions.join(ranked, "norm_mention")
+        .select("doc_id", "span_idx", "qid", "score", "rank")
+        .toPandas()
+    )
+
+
+def test_assignment_accuracy_vs_gold(ranked_occurrences, oracle_result):
     _, gold = oracle_result
-    ranked = res["ranked"].toPandas()
+    ranked = ranked_occurrences
     top1 = ranked[(ranked["rank"] == 1) & (ranked["score"] >= 0.3)]
     a = top1.merge(gold, on=["doc_id", "span_idx"])
     assert (a["qid"] == a["gold_qid"]).mean() >= 0.98
@@ -123,51 +150,13 @@ def test_join_strategies_agree(spark, corpus_spark, spark_result):
         )
 
 
-def test_attach_sig_scores_strategies_agree(spark, corpus_spark):
-    """The signature fan-out join must be identical under every strategy,
-    including with Catalyst broadcasting disabled (the 100 TB regime where
-    the signature table cannot broadcast)."""
-    from pyspark.sql import functions as F
-    from wdel_spark.plans.pipeline import (
-        attach_sig_scores, candidate_signatures, extract_mentions,
-        prepare_kb, score_pair_sigs)
-
-    kb = prepare_kb(
-        corpus_spark["kb_aliases"], corpus_spark["entity_vectors"],
-        corpus_spark["redirects"], corpus_spark["wikimedia_filter"])
-    mentions = extract_mentions(
-        corpus_spark["documents"], with_vec=False).localCheckpoint()
-    sig_scores = score_pair_sigs(
-        candidate_signatures(mentions, kb), kb).localCheckpoint()
-
-    def run(strategy, **kw):
-        df = attach_sig_scores(mentions, sig_scores, strategy=strategy, **kw)
-        return (df.sort("doc_id", "span_idx", "qid")
-                .toPandas().reset_index(drop=True))
-
-    base = run("broadcast")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        shuffled = run("shuffle")
-        salted = run("salted", hot_threshold=50, salt_mod=4)
-        # auto with a huge row estimate must route to salted, not broadcast
-        auto_big = run("auto", sig_rows=10**12, hot_threshold=50, salt_mod=4)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    pd.testing.assert_frame_equal(base, shuffled)
-    pd.testing.assert_frame_equal(base, salted)
-    pd.testing.assert_frame_equal(base, auto_big)
-
-
-def test_cg_recall_at_k_vs_gold(spark_result, oracle_result):
+def test_cg_recall_at_k_vs_gold(ranked_occurrences, oracle_result):
     """CG recall over the ER pipeline's own candidate lists vs gold
     entities (reference eval: prediction.py:64-72 + utils/io.py Stats) —
     the driver-checked analog is rank_of_gold; this is the pipeline-level
     metric."""
-    res, _ = spark_result
     _, gold = oracle_result
-    ranked = res["ranked"].toPandas()
+    ranked = ranked_occurrences
     m = ranked.merge(gold, on=["doc_id", "span_idx"])
     hit = m[m["qid"] == m["gold_qid"]][["doc_id", "span_idx", "rank"]]
     n_mentions = gold[["doc_id", "span_idx"]].drop_duplicates().shape[0]
@@ -178,29 +167,33 @@ def test_cg_recall_at_k_vs_gold(spark_result, oracle_result):
 
 
 def test_id_slim_runner_matches_string_path(spark, tmp_path):
-    """The scale runner's id-slim plan (rank per signature -> fan out on
-    64-bit ids) must produce the same cluster table as the string-keyed
-    snapshot runner — pins the r3 shuffle-slimming refactor to the
-    oracle-checked semantics."""
+    """Both modes of the stored-corpus runner — in-memory
+    (``workdir=None``) and durable (snapshot policy) — must induce exactly
+    the pandas oracle's partition of the stored corpus's mentions."""
+    from wdel_spark.datagen import CorpusConfig, gen_kb_pandas
     from wdel_spark.entry_pipeline import (
         materialize_corpus, run_er_from_parquet)
 
     cd = str(tmp_path / "corpus_ids")
     materialize_corpus(spark, n_docs=150, n_entities=40, out_dir=cd,
                        n_partitions=4)
-    mem = run_er_from_parquet(spark, cd).toPandas().sort_values(
-        ["doc_id", "span_idx"]).reset_index(drop=True)
+    cfg = CorpusConfig(n_docs=150, n_entities=40)
+    kb = gen_kb_pandas(cfg)
+    oracle = run_oracle(
+        gen_documents_pandas(cfg)[0], kb["kb_aliases"],
+        kb["entity_vectors"], kb["redirects"], kb["wikimedia_filter"],
+    )["clusters"]
+    mem = run_er_from_parquet(spark, cd).toPandas()
     dur = run_er_from_parquet(
-        spark, cd, workdir=str(tmp_path / "wd_ids")).toPandas().sort_values(
-        ["doc_id", "span_idx"]).reset_index(drop=True)
-    assert len(mem) > 0
-    assert mem.equals(dur)
+        spark, cd, workdir=str(tmp_path / "wd_ids")).toPandas()
+    assert len(mem) == len(oracle) > 0
+    assert _partition_pairs_equal(mem, "cluster_id", oracle, "cluster_key")
+    assert _partition_pairs_equal(dur, "cluster_id", oracle, "cluster_key")
 
 
 def test_fanout_join_strategies_agree_on_ids(spark, corpus_spark):
     """The id-keyed fan-out (er_ids_plan's occurrence attach) must be
-    semantics-identical under broadcast / salted / shuffle, like the
-    string-keyed attach already is."""
+    semantics-identical under broadcast / salted / shuffle."""
     from wdel_spark.plans.pipeline import (
         _fanout_join, prepare_kb, er_ids_plan)
     import pyspark.sql.functions as F
@@ -243,6 +236,7 @@ def test_wide_ids_resolve_narrow_collisions(spark, monkeypatch):
     ~10^12 rows for the same structural reason)."""
     import pyspark.sql.functions as F
     import wdel_spark.plans.pipeline as P
+    from wdel_spark.operators.cc import connected_components
 
     monkeypatch.setattr(P, "_NODE_SPACE", 256)
     qids = [f"Q{i}" for i in range(200)]
@@ -262,18 +256,23 @@ def test_wide_ids_resolve_narrow_collisions(spark, monkeypatch):
         by_id.setdefault(narrow[q], q)
     assert pair is not None, "fixture: no narrow-only collision found"
 
-    mentions = spark.createDataFrame(
-        [("d1", 0), ("d2", 0)], "doc_id string, span_idx int")
     assignments = spark.createDataFrame(
         [("d1", 0, pair[0]), ("d2", 0, pair[1])],
         "doc_id string, span_idx int, qid string")
     for wide_flag, expect_merged in ((False, True), (True, False)):
-        params = P.PipelineParams(wide_ids=wide_flag)
-        edges = assignments.select(
+        nodes = assignments.select(
+            "doc_id", "span_idx",
             P.mention_node(F.col("doc_id"), F.col("span_idx"),
-                           wide_flag).alias("src"),
+                           wide_flag).alias("node"),
             P.entity_node(F.col("qid"), wide_flag).alias("dst"))
-        out = P.cluster_mentions(mentions, edges, params).collect()
+        comps = connected_components(
+            nodes.select(F.col("node").alias("src"), "dst"))
+        out = (
+            nodes.join(comps, "node", "left")
+            .select("doc_id", "span_idx",
+                    F.coalesce("component", "node").alias("cluster_id"))
+            .collect()
+        )
         cl = {(r["doc_id"], r["span_idx"]): r["cluster_id"] for r in out}
         merged = cl[("d1", 0)] == cl[("d2", 0)]
         assert merged == expect_merged, (wide_flag, cl)

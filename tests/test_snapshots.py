@@ -6,36 +6,61 @@ import os
 from wdel_spark.plans import run_pipeline, PipelineParams
 from wdel_spark.sources import read_manifest, snapshot_is_valid
 
+# run_pipeline's snapshot pins, in the order they are written
+PINS = ("kb", "raws", "occurrences", "sig_scores", "raw_best", "clusters",
+        "s0_documents")
+AFTER_SIG_SCORES = ("raw_best", "clusters", "s0_documents")
+
 
 def test_pipeline_resumes_from_snapshots(spark, corpus_spark, tmp_path):
     wd = str(tmp_path / "run1")
     res1 = run_pipeline(spark, corpus_spark, workdir=wd)
 
-    # manifests written for every materialized stage with lineage counters
-    for stage in ("s1_mentions", "s2_pair_sigs", "s4_sig_scores",
-                  "s5_ranked", "s6_clusters"):
+    # manifests written for every pinned frame, row counts = counters
+    counters = json.load(open(os.path.join(wd, "_counters.json")))
+    for stage in PINS:
         m = read_manifest(os.path.join(wd, stage))
         assert m is not None and m["complete"], stage
         assert m["row_count"] > 0
         assert m["partition_counts"], stage
-
-    counters = json.load(open(os.path.join(wd, "_counters.json")))
-    assert counters["candidates_generated"] > 0
-    assert counters["pairs_scored"] > 0
-    assert counters["edges_kept"] > 0
+        assert counters[stage] == m["row_count"], stage
+    assert counters["raws"] >= counters["raw_best"] > 0
+    assert counters["clusters"] == counters["occurrences"]
 
     # collect run-1 output before the rerun overwrites its snapshot files
     c1 = res1["clusters"].toPandas().sort_values(
         ["doc_id", "span_idx"]).reset_index(drop=True)
 
-    # simulate kill-after-S2: invalidate later stages, keep S1/S2
-    for stage in ("s4_sig_scores", "s5_ranked", "s6_clusters"):
+    # simulate a kill after the scored-signature snapshot: later pins
+    # lose their manifests, earlier ones survive
+    for stage in AFTER_SIG_SCORES:
         os.remove(os.path.join(wd, stage, "_manifest.json"))
 
-    res2 = run_pipeline(spark, corpus_spark, workdir=wd)
-    c2 = res2["clusters"].toPandas().sort_values(
-        ["doc_id", "span_idx"]).reset_index(drop=True)
-    assert c1.equals(c2)
+    # the resumed run rewrites exactly the invalidated snapshots; a rerun
+    # after it rewrites none, and both keep the cold run's counters
+    import wdel_spark.plans.pipeline as P
+
+    written = []
+    real_write = P.write_snapshot
+
+    def recording_write(df, path, stage, input_hash, **kw):
+        written.append(stage)
+        return real_write(df, path, stage, input_hash, **kw)
+
+    P.write_snapshot = recording_write
+    try:
+        res2 = run_pipeline(spark, corpus_spark, workdir=wd)
+        assert sorted(written) == sorted(AFTER_SIG_SCORES)
+        written.clear()
+        res3 = run_pipeline(spark, corpus_spark, workdir=wd)
+        assert written == []
+    finally:
+        P.write_snapshot = real_write
+    assert res2["counters"] == res3["counters"] == counters
+    for res in (res2, res3):
+        c = res["clusters"].toPandas().sort_values(
+            ["doc_id", "span_idx"]).reset_index(drop=True)
+        assert c1.equals(c)
 
 
 def test_snapshot_invalidated_by_param_change(spark, corpus_spark, tmp_path):
@@ -43,10 +68,10 @@ def test_snapshot_invalidated_by_param_change(spark, corpus_spark, tmp_path):
 
     wd = str(tmp_path / "run2")
     run_pipeline(spark, corpus_spark, workdir=wd)
-    path = os.path.join(wd, "s2_pair_sigs")
+    path = os.path.join(wd, "sig_scores")
     m1 = read_manifest(path)
     # same params -> same input_hash -> snapshot still valid
-    assert snapshot_is_valid(path, "s2_pair_sigs", m1["input_hash"])
+    assert snapshot_is_valid(path, "sig_scores", m1["input_hash"])
     # different params -> rerun writes a DIFFERENT hash (stage recomputed)
     run_pipeline(spark, corpus_spark, workdir=wd,
                  params=PipelineParams(top_k=5))
@@ -76,7 +101,7 @@ def test_snapshot_invalidated_by_input_change(spark, corpus_spark, tmp_path):
 
     wd = str(tmp_path / "wd_inputchange")
     res1 = run_pipeline(spark, corpus_spark, workdir=wd)
-    n1 = res1["counters"]["mentions_extracted"]
+    n1 = res1["counters"]["occurrences"]
 
     # drop half the documents -> a DIFFERENT input behind the same name.
     # write/read parquet so the identity is file-backed like production
@@ -88,7 +113,7 @@ def test_snapshot_invalidated_by_input_change(spark, corpus_spark, tmp_path):
     tables2["documents"] = spark.read.parquet(half_path)
 
     res2 = run_pipeline(spark, tables2, workdir=wd)
-    n2 = res2["counters"]["mentions_extracted"]
+    n2 = res2["counters"]["occurrences"]
     assert n2 < n1, (n1, n2)  # stale reuse would return n1 unchanged
     assert res2["counters"]["span_invariant_violations"] == 0
 
@@ -108,13 +133,12 @@ def test_stored_corpus_runner_durable_resume(spark, tmp_path):
                        n_partitions=4)
     c1 = run_er_from_parquet(spark, cd, workdir=wd).toPandas().sort_values(
         ["doc_id", "span_idx"]).reset_index(drop=True)
-    for stage in ("s1_mentions", "s2_pair_sigs", "s4_sig_scores",
-                  "s5_ranked", "s6_clusters"):
+    for stage in PINS:
         m = read_manifest(os.path.join(wd, stage))
         assert m is not None and m["complete"], stage
 
-    # kill-after-S2: later stages lose their manifests, S1/S2 survive
-    for stage in ("s4_sig_scores", "s5_ranked", "s6_clusters"):
+    # kill after the scored-signature snapshot
+    for stage in AFTER_SIG_SCORES:
         os.remove(os.path.join(wd, stage, "_manifest.json"))
     c2 = run_er_from_parquet(spark, cd, workdir=wd).toPandas().sort_values(
         ["doc_id", "span_idx"]).reset_index(drop=True)

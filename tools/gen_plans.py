@@ -41,12 +41,11 @@ Reading guide — what to check in each plan:
 """)
 
 # 1. flagship id plan (no pinning so the whole DAG shows as one tree)
-from wdel_spark.entry_pipeline import (
-    derive_mention_tokens, derive_vocab_kb_df, derive_spans_documents)
+from wdel_spark.entry_pipeline import derive_mention_tokens, derive_vocab_kb_df
 from wdel_spark.plans.pipeline import er_ids_plan
 mt = derive_mention_tokens(spark, sf)
 kb = derive_vocab_kb_df(spark, mt)
-clusters = er_ids_plan(None, kb, pin=lambda df: df, mention_spans=mt)
+clusters = er_ids_plan(None, kb, pin=lambda name, df: df, mention_spans=mt)
 section("Flagship ER pipeline (er_ids_plan, un-pinned single DAG)", clusters,
         """Granularity ladder (r6 shape): the mention token table comes straight
 off the documents scan (no spans-array re-nest); occurrences carry only
@@ -56,14 +55,7 @@ signatures; CC on slim (src,dst) longs with the star-shaped fast path.
 In the executed plan the `pin` points cut this tree into materialized
 stages.""")
 
-# 2. S1 Catalyst extract
-from wdel_spark.plans.pipeline import extract_mentions
-docs = derive_spans_documents(spark, sf)
-section("S1 extract_mentions (pure Catalyst, with_vec=False)",
-        extract_mentions(docs, with_vec=False),
-        "No python workers: normalize + block_key are codegen'd expressions.")
-
-# 3. simhash neardup
+# 2. simhash neardup
 import __spark_entry__ as E
 qs = E.queries()
 section("simhash_neardup (banded self-join)", qs["simhash_neardup"](spark, sf))

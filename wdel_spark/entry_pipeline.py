@@ -13,35 +13,26 @@ keys) — the same shuffle/skew profile as the synthetic corpus at scale.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window as W
 
 from wdel_spark.functions.textnorm import normalize_text, block_key
 from wdel_spark.functions.scoring import hash_embed, EMBED_DIM
-from wdel_spark.plans.pipeline import (
-    PipelineParams,
-    extract_mentions,
-    block_candidates,
-    score_pairs,
-    cluster_mentions,
-)
+from wdel_spark.plans.pipeline import Pin, PipelineParams
 
 
-def derive_spans_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flat documents -> interleaved (doc_id, spans[]) table.
-
-    Span kind from the first hex char of md5("<doc_id>:<pos>"):
-    0-2 -> mention (3/16), 3 -> media (1/16), else text — identical
-    semantics expressible in DuckDB for the oracle-checked span stats.
-    Offsets are cumulative char positions (token lengths + single spaces).
-    """
+def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flat documents -> one (doc_id, pos, tok, kind) row per token: the
+    ``split(' +')`` tokenization and the span-kind rule both derived
+    tables share.  Kind comes from the first hex char of
+    md5("<doc_id>:<pos>"): 0-2 -> mention (3/16), 3 -> media (1/16), else
+    text — identical semantics expressible in DuckDB for the oracle
+    checks."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # small-file inputs arrive in a handful of splits; spread the
-    # explode+window work across the cluster up front (one cheap shuffle
-    # of the compact source rows, partitioned on the downstream key)
+    # the source is a one-row-group file -> one scan task; spread the
+    # explode + md5 across the cluster (one cheap shuffle of compact
+    # rows, partitioned on the downstream key)
     npart = spark.sparkContext.defaultParallelism
     toks = d.repartition(npart, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -55,18 +46,27 @@ def derive_spans_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(h == "3", F.lit("media"))
         .otherwise(F.lit("text"))
     )
+    return toks.withColumn("kind", kind)
+
+
+def derive_spans_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flat documents -> interleaved (doc_id, spans[]) table, one span per
+    token (kinds by the ``_tokens`` rule).  Offsets are cumulative char
+    positions (token lengths + single spaces).
+    """
     w = (
         W.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    spans = toks.select(
+    media = F.col("kind") == "media"
+    spans = _tokens(spark, sf_dir).select(
         "doc_id",
         "pos",
-        kind.alias("kind"),
-        F.when(kind == "media", F.lit("")).otherwise(F.col("tok")).alias("text"),
+        "kind",
+        F.when(media, F.lit("")).otherwise(F.col("tok")).alias("text"),
         F.when(
-            kind == "media",
+            media,
             F.concat_ws("/", F.lit("img:/"), "doc_id",
                         F.col("pos").cast("string")),
         ).otherwise(F.lit("")).alias("media_ref"),
@@ -98,25 +98,15 @@ def derive_mention_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     Identical rows to ``derive_spans_documents`` followed by
     explode+filter(kind=='mention'): the spans array holds one entry per
     token ordered by ``pos``, so the posexplode index over it equals the
-    token position — ``span_idx == pos`` — and the mention predicate is
-    the same md5 rule.  What this skips is everything the ER path never
+    token position — ``span_idx == pos`` — and both filter on the same
+    ``_tokens`` kind.  What this skips is everything the ER path never
     reads: the per-token offset window (one sort), the
     collect_list/array_sort re-nest (one full shuffle of every token
     struct), and the downstream re-explode of that array per consumer.
     Media/span-stats queries still use ``derive_spans_documents`` — they
     need the media spans and the nested shape."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # the source is a one-row-group file -> one scan task; spread the
-    # explode + md5 across the cluster (one cheap shuffle of compact rows)
-    npart = spark.sparkContext.defaultParallelism
-    toks = d.repartition(npart, "doc_id").select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.posexplode(F.split("text", " +")).alias("span_idx", "raw"),
-    )
-    h = F.substring(
-        F.md5(F.concat_ws(":", "doc_id", F.col("span_idx").cast("string"))),
-        1, 1)
-    return toks.where(h.isin("0", "1", "2"))
+    return _tokens(spark, sf_dir).where(F.col("kind") == "mention").select(
+        "doc_id", F.col("pos").alias("span_idx"), F.col("tok").alias("raw"))
 
 
 _KB_SCHEMA = (
@@ -204,112 +194,48 @@ def derive_vocab_kb_df(spark: SparkSession, docs_or_mentions: DataFrame,
         ["qid", "norm_alias"])
 
 
-def _pin_mem(df: DataFrame) -> DataFrame:
-    """Materialize a SMALL multi-consumer frame in executor memory.
-
-    Replaces the eager ``localCheckpoint`` this path used through round 2:
-    localCheckpoint routes every block through the block manager's disk
-    tier on eviction, and with ``spark.local.dir`` on the throttled block
-    device four eager materializations dominated the sf0.1 flagship bench
-    (r2 VERDICT #2: 22 s -> 39 s regression).  MEMORY_ONLY persist + one
-    count gives the same evaluate-once semantics for frames that are tiny
-    at test scale; the checkpointed runner (``run_pipeline`` /
-    ``run_er_from_parquet(workdir=...)``) remains the durable path for
-    frames that must survive executor loss."""
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_ONLY)
-    df.count()
-    return df
-
-
-def _pin_mem_lazy(df: DataFrame) -> DataFrame:
-    """MEMORY_ONLY persist WITHOUT the eager count (r6).
-
-    The eager count per pin is a full extra job launch each; a lazy
-    persist still evaluates the frame once — the cache populates on
-    first use, and every pinned frame on the testdata paths is either
-    followed by its own count (n_sigs, the fan-out strategy counts) or
-    consumed inside a single downstream job.  Interleaved A/Bs at
-    sf1.0: er_recall_at_k 3.42/4.56/4.43 -> 1.50/1.58/1.61 s; flagship
-    e2e 6.30/6.44/7.05 -> 5.62/5.91/5.95 s (mt+kb) and 6.52/6.76/7.09
-    -> 6.15/6.29/6.50 s (er_ids_plan pins, separate windows).  The
-    durable stored-corpus runner keeps eager localCheckpoint pins —
-    snapshot/resume semantics need materialization at stage
-    boundaries."""
-    from pyspark import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_ONLY)
-
-
 def er_ranked_over_testdata(
     spark: SparkSession,
     sf_dir: str,
     params: PipelineParams = PipelineParams(),
     decoys: bool = False,
-    sig_level: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Blocking -> scoring -> per-mention ranking over the derived corpus.
-
-    Default: returns ``(mentions, ranked)`` where ``ranked`` carries
-    (doc_id, span_idx, qid, score, rank) — the candidate-generation
-    surface the recall@k metric (reference `utils/io.py:20-50`,
-    `prediction.py:64-72`) evaluates.
-
-    ``sig_level=True`` (r6, guide §8 "decide with small rows"): returns
+    """Blocking -> scoring -> ranking over the derived corpus, at
+    SIGNATURE granularity (r6, guide §8 "decide with small rows"): returns
     ``(norm_counts, ranked_sigs)`` — (norm_mention, n_occ) occurrence
-    counts and the SIGNATURE-granularity ranking (norm_mention, qid,
-    score, rank).  A mention occurrence's candidate list, scores, ranks
-    and gold qid are all pure functions of its normalized text, so any
-    per-occurrence aggregate of ranks is a count-weighted aggregate of
-    per-signature ranks; the occurrence fan-out join (|occurrences| x k
-    rows) is skipped entirely."""
+    counts and the per-signature ranking (norm_mention, qid, score, rank),
+    the candidate-generation surface the recall@k metric (reference
+    `utils/io.py:20-50`, `prediction.py:64-72`) evaluates.
+
+    A mention occurrence's candidate list, scores, ranks and gold qid are
+    all pure functions of its normalized text, so any per-occurrence
+    aggregate of ranks is a count-weighted aggregate of per-signature
+    ranks; the occurrence fan-out join (|occurrences| x k rows) is never
+    built."""
     from wdel_spark.functions.textnorm import block_key_col, normalize_col
     from wdel_spark.plans.pipeline import (
-        candidate_signatures, score_pair_sigs, attach_sig_scores,
-        rank_signature_scores)
+        candidate_signatures, score_pair_sigs, rank_signature_scores)
 
-    # sig_level consumers act exactly once at the end — lazy pins skip
-    # one full job launch per pin (see _pin_mem_lazy)
-    pin = _pin_mem_lazy if sig_level else _pin_mem
-    mt = pin(derive_mention_tokens(spark, sf_dir))
-    kb = pin(derive_vocab_kb_df(spark, mt, decoys=decoys))
-    # same rows as extract_mentions(derive_spans_documents(...)) — see
-    # derive_mention_tokens: span_idx == token pos, mention == raw token.
-    # normalize runs at distinct-RAW granularity and fans out through a
-    # join (the er_ids_plan ladder, guide §2.3): norm/block_key are pure
-    # functions of the raw text, so per-occurrence values are identical
+    # consumers act exactly once at the end: lazy pins
+    pin = Pin("lazy")
+    mt = pin("mention_tokens", derive_mention_tokens(spark, sf_dir))
+    kb = pin("kb", derive_vocab_kb_df(spark, mt, decoys=decoys))
+    # normalize at distinct-RAW granularity, as in er_ids_plan
     raws = (
         mt.select("raw").distinct()
-        .select(
-            F.col("raw").alias("mention"),
-            normalize_col(F.col("raw")).alias("norm_mention"),
-        )
+        .select("raw", normalize_col(F.col("raw")).alias("norm_mention"))
         .withColumn("block_key", block_key_col(F.col("norm_mention")))
     )
     norms = raws.select("norm_mention", "block_key").distinct()
     sig_scores = score_pair_sigs(
         candidate_signatures(norms, kb, params, assume_unique=True), kb)
-    if not sig_level:
-        sig_scores = _pin_mem(sig_scores)
-    if sig_level:
-        norm_counts = (
-            mt.groupBy(F.col("raw").alias("mention"))
-            .agg(F.count("*").alias("n_occ"))
-            .join(raws.select("mention", "norm_mention"), "mention")
-            .groupBy("norm_mention")
-            .agg(F.sum("n_occ").alias("n_occ"))
-        )
-        return norm_counts, rank_signature_scores(sig_scores, params)
-    mentions = _pin_mem(
-        mt.select("doc_id", "span_idx", F.col("raw").alias("mention"))
-        .join(raws, "mention")
-        .select("doc_id", "span_idx", "mention", "norm_mention",
-                "block_key"))
-    ranked = attach_sig_scores(
-        mentions, rank_signature_scores(sig_scores, params),
-        sig_rows=sig_scores.count())
-    return mentions, ranked
+    norm_counts = (
+        mt.groupBy("raw").agg(F.count("*").alias("n_occ"))
+        .join(raws.select("raw", "norm_mention"), "raw")
+        .groupBy("norm_mention")
+        .agg(F.sum("n_occ").alias("n_occ"))
+    )
+    return norm_counts, rank_signature_scores(sig_scores, params)
 
 
 def er_over_testdata(
@@ -318,16 +244,14 @@ def er_over_testdata(
     params: PipelineParams = PipelineParams(),
 ) -> DataFrame:
     """Full ER pipeline over the derived corpus; returns the cluster table
-    (doc_id, span_idx, cluster_id) via the granularity-laddered id plan
-    (cluster-identical to the string path — pinned by
-    test_id_slim_runner_matches_string_path and the er_cluster_partition
-    oracle)."""
+    (doc_id, span_idx, cluster_id) via ``er_ids_plan`` under the lazy pin
+    policy (pinned by the er_cluster_partition oracle)."""
     from wdel_spark.plans.pipeline import er_ids_plan
 
-    mt = _pin_mem_lazy(derive_mention_tokens(spark, sf_dir))
-    kb = _pin_mem_lazy(derive_vocab_kb_df(spark, mt))
-    return er_ids_plan(None, kb, params, pin=_pin_mem_lazy,
-                       mention_spans=mt)
+    pin = Pin("lazy")
+    mt = pin("mention_tokens", derive_mention_tokens(spark, sf_dir))
+    kb = pin("kb", derive_vocab_kb_df(spark, mt))
+    return er_ids_plan(None, kb, params, pin=pin, mention_spans=mt)
 
 
 def entry_flagship(spark: SparkSession) -> DataFrame:
@@ -375,14 +299,14 @@ def run_er_from_parquet(
     resume: bool = True,
 ) -> DataFrame:
     """The measured pipeline: read the stored interleaved corpus + KB
-    (columnar scan, no python) -> extract -> block -> score -> rank -> CC.
+    (columnar scan, no python) -> ``er_ids_plan``.
 
-    ``workdir`` routes the run through the checkpoint-resumable snapshot
-    layer (``run_pipeline``): every stage lands as a durable parquet
-    snapshot with manifest + lineage counters, and a rerun resumes from
-    the last complete stage (r2 VERDICT #8 — the fault-tolerant path the
-    stored-corpus runner previously bypassed via localCheckpoint).
-    ``workdir=None`` keeps the in-memory mode for benches."""
+    ``workdir`` routes the run through ``run_pipeline``'s snapshot
+    policy: every pinned frame lands as a durable parquet snapshot with
+    manifest + lineage counters, and a rerun resumes from the snapshots
+    already complete (r2 VERDICT #8).  ``workdir=None`` keeps the
+    in-memory mode for benches, under the checkpoint policy (see ``Pin``
+    for why not the lazy one)."""
     import os as _os
 
     from wdel_spark.plans.pipeline import prepare_kb, er_ids_plan, run_pipeline
@@ -395,38 +319,7 @@ def run_er_from_parquet(
         return run_pipeline(
             spark, tables, workdir=workdir, params=params, resume=resume,
         )["clusters"]
-    kb = prepare_kb(rd("kb_aliases"), rd("entity_vectors"),
-                    rd("redirects"), rd("wikimedia_filter")
-                    ).localCheckpoint(eager=True)
-    # the granularity-laddered id plan: normalize on distinct raw texts,
-    # block-key on distinct norms, strings never in a per-occurrence
-    # shuffle (see er_ids_plan docstring for the measured rationale).
-    # Pin stays localCheckpoint here (NOT _pin_mem): a MEMORY_ONLY pin on
-    # the stored-corpus job recomputes the whole upstream chain —
-    # including the Python scorer — whenever unified-memory pressure
-    # evicts a block (measured r4: 38.6 s -> 234 s at local[8], 7x CPU,
-    # two ~300-cpu-s zero-input recompute stages); localCheckpoint blocks
-    # spill to disk instead of recomputing
-    return er_ids_plan(rd("documents"), kb, params)
-
-
-def run_er_synthetic(
-    spark: SparkSession,
-    n_docs: int,
-    n_entities: int,
-    params: PipelineParams = PipelineParams(),
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """The real ER workload (synthetic interleaved corpus + KB) as one lazy
-    plan without counter actions — the scaling-bench job."""
-    from wdel_spark.datagen import CorpusConfig, gen_corpus_spark
-    from wdel_spark.plans.pipeline import prepare_kb, er_ids_plan
-
-    npart = n_partitions or spark.sparkContext.defaultParallelism * 2
-    cfg = CorpusConfig(n_docs=n_docs, n_entities=n_entities)
-    t = gen_corpus_spark(spark, cfg, n_partitions=npart)
-    # the KB feeds several broadcasts — each broadcast would otherwise
-    # re-evaluate the generation subplan; materialize it once
-    kb = prepare_kb(t["kb_aliases"], t["entity_vectors"], t["redirects"],
-                    t["wikimedia_filter"]).localCheckpoint(eager=True)
-    return er_ids_plan(t["documents"], kb, params)
+    pin = Pin()
+    kb = pin("kb", prepare_kb(rd("kb_aliases"), rd("entity_vectors"),
+                              rd("redirects"), rd("wikimedia_filter")))
+    return er_ids_plan(rd("documents"), kb, params, pin=pin)

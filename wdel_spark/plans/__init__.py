@@ -1,28 +1,24 @@
 from wdel_spark.plans.pipeline import (
-    extract_mentions,
     prepare_kb,
-    block_candidates,
-    score_pairs,
     candidate_signatures,
     score_pair_sigs,
-    attach_sig_scores,
-    rank_and_edges,
-    cluster_mentions,
+    rank_signature_scores,
+    signature_winners,
+    er_ids_plan,
+    Pin,
     verify_span_invariant,
     run_pipeline,
     PipelineParams,
 )
 
 __all__ = [
-    "extract_mentions",
     "prepare_kb",
-    "block_candidates",
-    "score_pairs",
     "candidate_signatures",
     "score_pair_sigs",
-    "attach_sig_scores",
-    "rank_and_edges",
-    "cluster_mentions",
+    "rank_signature_scores",
+    "signature_winners",
+    "er_ids_plan",
+    "Pin",
     "verify_span_invariant",
     "run_pipeline",
     "PipelineParams",

@@ -1,22 +1,29 @@
-"""The entity-resolution pipeline: stages S1..S7 (SURVEY.md §7.1).
+"""The entity-resolution core: one formulation, ``er_ids_plan``.
 
-Each stage is a pure ``DataFrame -> DataFrame`` function; ``run_pipeline``
-chains them with checkpoint-resumable snapshots + lineage counters.
+Dataflow (the reference's ``POST /el`` flow, `src/pipeline.py:314-338`,
+in Spark terms), each step at the coarsest granularity that preserves its
+semantics:
 
-Dataflow (one lazy DAG per stage, restating the reference's ``POST /el``
-flow `/root/reference/src/pipeline.py:314-338` in Spark terms):
-
-    documents ── S1 extract ──> mentions(norm, block_key, vec)
+    documents ── explode ──> occurrences(doc_id, span_idx, node, raw_id)
+    distinct raw texts ── normalize ──> (raw_id, norm_mention, nm_id)
     kb tables ── prepare_kb ──> aliases(resolved qid, block_key) ⋈ vectors
-    S2 block:   mentions ⋈ aliases ON block_key     [replaces faiss ANN]
-    S4 score:   batched JW + Levenshtein + cosine   [replaces BERT + Qwen]
-    S5 rank:    window top-k, threshold -> edges
-    S6 cluster: large-star/small-star CC -> cluster ids
-    S7 emit:    clusters + span-sequence invariant check
+    block:   distinct norms ⋈ aliases ON block_key  [replaces faiss ANN]
+    score:   batched JW + Levenshtein + cosine      [replaces BERT + Qwen]
+    assign:  per-signature top-k -> rank-1 winner above threshold
+    fan-out: winner -> raws -> occurrences on 64-bit ids -> edges
+    cluster: large-star/small-star CC -> cluster ids
 
-Python crosses the JVM boundary in exactly two pandas-UDF stages (mention
-featurization, pair scoring); everything else is whole-stage-codegen'd
-Catalyst expressions.
+``Pin`` is the one materialization policy for the frames several stages
+consume (lazy memory, eager checkpoint, or durable snapshot).
+``run_pipeline`` is the core under the snapshot policy plus lineage
+counters and the span-sequence invariant check; streaming runs the
+assignment half (``signature_winners``) per micro-batch.
+
+Python crosses the JVM boundary in two Arrow-batched stages, each once per
+DISTINCT text, never per occurrence: KB featurization (the vocab KB's
+``derive_vocab_kb_df``, or the datagen KB) and the signature scorer
+(``score_pair_sigs``).  Everything else is whole-stage-codegen'd Catalyst
+expressions.
 """
 
 from __future__ import annotations
@@ -29,14 +36,10 @@ from dataclasses import dataclass, asdict
 import numpy as np
 import pandas as pd
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from wdel_spark.functions.textnorm import (
-    normalize_text,
-    block_key,
-    normalize_col,
-    block_key_col,
-)
+from wdel_spark.functions.textnorm import normalize_col, block_key_col
 from wdel_spark.functions.scoring import (
     hash_embed,
     seq_cosine_batch,
@@ -49,6 +52,7 @@ from wdel_spark.operators.cc import connected_components
 from wdel_spark.sources.snapshot import (
     write_snapshot,
     read_snapshot,
+    read_manifest,
     snapshot_is_valid,
 )
 
@@ -71,93 +75,89 @@ class PipelineParams:
         ).hexdigest()[:16]
 
 
-# ------------------------------------------------------------------ S1
+# ------------------------------------------------------ materialization
 
-_MENTION_FEAT_SCHEMA = (
-    "doc_id string, span_idx int, mention string, norm_mention string, "
-    "block_key string, m_vec array<float>"
-)
-_MENTION_SLIM_SCHEMA = (
-    "doc_id string, span_idx int, mention string, norm_mention string, "
-    "block_key string"
-)
+class Pin:
+    """The one materialization hook: ``pin(name, df)`` returns ``df``
+    evaluated at most once for its several consumers, and records it under
+    ``name``.  Three policies:
+
+      lazy       — MEMORY_ONLY persist, no job of its own: the cache fills
+                   on first use.  For small frames consumed inside a few
+                   jobs (the testdata paths): an eager pin is a full extra
+                   job launch each (r6 A/B at sf1.0: flagship e2e
+                   6.52/6.76/7.09 -> 6.15/6.29/6.50 s).
+      checkpoint — eager ``localCheckpoint``.  For compute-heavy frames: a
+                   MEMORY_ONLY block evicted under memory pressure
+                   recomputes the whole upstream chain, Python scorer
+                   included (r4 stored corpus at local[8]: 38.6 -> 234 s),
+                   while checkpoint blocks spill to disk.
+      snapshot   — durable parquet snapshot + manifest at
+                   ``workdir/<name>``, skipped on rerun when its manifest
+                   carries ``input_hash`` (``resume=True``); CC checkpoints
+                   each iteration under ``cc_workdir``.
+
+    ``df`` may also be a zero-argument function that returns the frame:
+    the snapshot policy calls it only when the snapshot is missing, so a
+    frame whose construction runs jobs (``er_ids_plan`` runs CC) is not
+    rebuilt on resume.
+
+    ``row_counts`` gives each pinned frame's rows; under the snapshot
+    policy they come from the manifests of every snapshot of this input
+    in ``workdir``, so no count job runs."""
+
+    POLICIES = ("lazy", "checkpoint", "snapshot")
+
+    def __init__(self, policy: str = "checkpoint", workdir: str | None = None,
+                 input_hash: str = "", resume: bool = True):
+        if policy not in self.POLICIES:
+            raise ValueError(f"unknown pin policy {policy!r}")
+        if (policy == "snapshot") != (workdir is not None):
+            raise ValueError("a workdir is needed by, and only by, the "
+                             "snapshot policy")
+        self.policy = policy
+        self.workdir = workdir
+        self.input_hash = input_hash
+        self.resume = resume
+        self.cc_workdir = (os.path.join(workdir, "cc_iters")
+                           if workdir is not None else None)
+        self.pinned: dict[str, DataFrame] = {}
+
+    def __call__(self, name: str, df) -> DataFrame:
+        build = df if callable(df) else lambda: df
+        if self.policy == "lazy":
+            out = build().persist(StorageLevel.MEMORY_ONLY)
+        elif self.policy == "checkpoint":
+            out = build().localCheckpoint(eager=True)
+        else:
+            path = os.path.join(self.workdir, name)
+            if not (self.resume
+                    and snapshot_is_valid(path, name, self.input_hash)):
+                write_snapshot(build(), path, name, self.input_hash)
+            out = read_snapshot(SparkSession.active(), path)
+        self.pinned[name] = out
+        return out
+
+    def row_counts(self) -> dict[str, int]:
+        if self.policy == "snapshot":
+            manifests = (read_manifest(os.path.join(self.workdir, n))
+                         for n in os.listdir(self.workdir))
+            return {m["stage"]: m["row_count"] for m in manifests
+                    if m and m["input_hash"] == self.input_hash}
+        return {n: df.count() for n, df in self.pinned.items()}
 
 
-# mention text -> (norm, block_key) memo.  Mention texts repeat massively
-# (Zipf), and with spark.python.worker.reuse the memo survives across
-# batches AND stages within one worker.  Pure cache: byte-identical output.
-_NORM_MEMO: dict[str, tuple[str, str]] = {}
-_NORM_MEMO_MAX = 1 << 20
-
-
-def _norm_and_key(texts) -> tuple[list[str], list[str]]:
-    norms, keys = [], []
-    memo = _NORM_MEMO
-    for t in texts:
-        hit = memo.get(t)
-        if hit is None:
-            n = normalize_text(t)
-            hit = (n, block_key(n))
-            if len(memo) < _NORM_MEMO_MAX:
-                memo[t] = hit
-        norms.append(hit[0])
-        keys.append(hit[1])
-    return norms, keys
-
-
-def extract_mentions(documents: DataFrame, with_vec: bool = True
-                     ) -> DataFrame:
-    """S1: documents -> one row per mention span, featurized.
-
-    ``posexplode`` keeps the span's array position as ``span_idx`` (the
-    stable mention key — Spark must never rely on row order, SURVEY.md §2
-    J4); the source ``documents`` rows are untouched, preserving the
-    span-sequence invariant.
-
-    ``with_vec=False`` is the production path and is PURE JVM: normalize
-    + blocking key are Catalyst expressions (``textnorm.normalize_col``,
-    fuzz-pinned byte-equal to the python oracle kernels), so the hottest
-    stage of the pipeline stays inside whole-stage codegen — no python
-    workers, no Arrow transfer.  (Measured: the Arrow/python-runner round
-    trip on this stage was the dominant scaling-efficiency killer at
-    local[32] even with ZERO python compute.)  Embeddings are computed
-    once per *distinct* normalized mention inside the signature scorer
-    (``score_pair_sigs``), not per occurrence — at web scale mention
-    texts repeat massively (Zipf), so per-occurrence embedding is pure
-    waste and the 128-float column would dominate every shuffle.
-
-    ``with_vec=True`` keeps the Arrow-batched python path (hash_embed is
-    numpy); it repartitions by compute first.
-    """
-    exploded = (
+def explode_mentions(documents: DataFrame) -> DataFrame:
+    """Interleaved documents -> one (doc_id, span_idx, raw) row per mention
+    span.  ``posexplode`` keeps the span's array position as ``span_idx``,
+    the stable mention key (Spark must never rely on row order, SURVEY.md
+    §2 J4); the ``documents`` rows themselves are untouched."""
+    return (
         documents.select(
-            "doc_id", F.posexplode("spans").alias("span_idx", "span")
-        )
+            "doc_id", F.posexplode("spans").alias("span_idx", "span"))
         .where(F.col("span.kind") == "mention")
-        .select("doc_id", "span_idx", F.col("span.text").alias("mention"))
+        .select("doc_id", "span_idx", F.col("span.text").alias("raw"))
     )
-    if not with_vec:
-        norm = normalize_col(F.col("mention"))
-        return exploded.select(
-            "doc_id", "span_idx", "mention", norm.alias("norm_mention"),
-        ).withColumn("block_key", block_key_col(F.col("norm_mention")))
-
-    def featurize(batches):
-        for pdf in batches:
-            norms, keys = _norm_and_key(pdf["mention"].tolist())
-            vecs = hash_embed(norms, EMBED_DIM)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "span_idx": pdf["span_idx"],
-                "mention": pdf["mention"],
-                "norm_mention": norms,
-                "block_key": keys,
-                "m_vec": [v.tolist() for v in vecs],
-            })
-
-    npart = documents.sparkSession.sparkContext.defaultParallelism * 4
-    return exploded.repartition(npart).mapInPandas(
-        featurize, schema=_MENTION_FEAT_SCHEMA)
 
 
 # ------------------------------------------------------------------ KB prep
@@ -192,101 +192,7 @@ def prepare_kb(
     return a.join(entity_vectors.withColumnRenamed("vec", "e_vec"), "qid")
 
 
-# ------------------------------------------------------------------ S2
-
-def block_candidates(
-    mentions: DataFrame,
-    kb: DataFrame,
-    params: PipelineParams = PipelineParams(),
-) -> DataFrame:
-    """S2: the blocking join — mentions ⋈ aliases ON block_key.
-
-    Replaces the reference's faiss ANN search
-    (`/root/reference/src/candidate_generation/prediction.py:144-147`).
-    Strategies:
-      broadcast — KB alias table fits in memory (the common case: even 93M
-                  aliases × ~100 B ≈ 10 GB is near the edge; per-language
-                  partition broadcast would be used at full Wikidata scale);
-      sortmerge — both sides shuffled on block_key, AQE skew-split enabled;
-      salted    — explicit hot-key salting (operators/skew.py) on top of
-                  sort-merge for adversarial skew.
-    Empty keys never join (filtered both sides).
-    """
-    m = mentions.where(F.col("block_key") != "")
-    k = kb.where(F.col("block_key") != "")
-    if params.join_strategy == "broadcast":
-        return m.join(F.broadcast(k), "block_key")
-    if params.join_strategy == "salted":
-        return salted_join(
-            m, k, "block_key",
-            salt_mod=params.salt_mod,
-            hot_threshold=params.hot_threshold,
-            probe_salt_cols=["doc_id", "span_idx"],
-        )
-    # sort-merge: spread both sides on the key, let AQE split skew
-    return m.repartition("block_key").join(
-        k.hint("merge"), "block_key"
-    )
-
-
-# ------------------------------------------------------------------ S4
-
-_SCORE_SCHEMA = (
-    "doc_id string, span_idx int, qid string, norm_mention string, "
-    "norm_alias string, score double"
-)
-
-
-def score_pairs(candidates: DataFrame) -> DataFrame:
-    """S4: batched pairwise scorer over Arrow batches.
-
-    One ``mapInPandas`` computing, per (mention, alias) pair:
-      cosine(m_vec, e_vec)   — vectorized numpy over the whole batch;
-      Jaro-Winkler + Levenshtein on the normalized strings;
-      combined score = 0.4·JW + 0.3·lev_sim + 0.3·cos  (functions/scoring).
-
-    The SAME kernels back the pandas oracle, so score equality is by
-    construction.  Behavioral stand-in for the reference's bi-encoder dot
-    product (`model.py:105-107`) + Qwen yes/no judge
-    (`entity_disambiguation/prediction.py:84-164`).
-    Perf: Levenshtein runs JVM-side (Catalyst ``levenshtein()`` builtin,
-    whole-stage codegen) BEFORE the Arrow batch crosses into Python;
-    Jaro-Winkler + the combine are batched numpy (``pair_score_batch``) —
-    no per-row Python anywhere in the hot path.
-    """
-
-    def scorer(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mv = np.array([np.asarray(v, dtype=np.float32)
-                           for v in pdf["m_vec"]])
-            ev = np.array([np.asarray(v, dtype=np.float32)
-                           for v in pdf["e_vec"]])
-            # sequential-double cosine — the kernel shared verbatim with
-            # the signature scorer and the pandas oracle
-            cos = seq_cosine_batch(mv, ev)
-            scores = pair_score_batch(
-                pdf["norm_mention"], pdf["norm_alias"], cos,
-                lev=pdf["lev"].to_numpy())
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "span_idx": pdf["span_idx"],
-                "qid": pdf["qid"],
-                "norm_mention": pdf["norm_mention"],
-                "norm_alias": pdf["norm_alias"],
-                "score": scores,
-            })
-
-    slim = candidates.select(
-        "doc_id", "span_idx", "qid", "norm_mention", "norm_alias",
-        "m_vec", "e_vec",
-        F.levenshtein("norm_mention", "norm_alias").alias("lev"),
-    )
-    return slim.mapInPandas(scorer, schema=_SCORE_SCHEMA)
-
-
-# ----------------------------------------------- S2'+S4': signature path
+# ------------------------------------------ block + score (signatures)
 
 _SIG_SCORE_SCHEMA = "norm_mention string, qid string, score double"
 
@@ -297,7 +203,7 @@ def candidate_signatures(
     params: PipelineParams = PipelineParams(),
     assume_unique: bool = False,
 ) -> DataFrame:
-    """S2': blocking join at SIGNATURE granularity.
+    """Blocking join at SIGNATURE granularity.
 
     Mention texts repeat massively at web scale (the hot alias owns 30% of
     mentions in the skew fixture), but the score is a pure function of
@@ -351,7 +257,7 @@ def candidate_signatures(
 
 
 def score_pair_sigs(pair_sigs: DataFrame, kb: DataFrame) -> DataFrame:
-    """S4': batched scorer over distinct signatures.
+    """Batched scorer over distinct signatures.
 
     ``pair_sigs``: slim (norm_mention, norm_alias, qid) from
     ``candidate_signatures``; ``kb``: any frame carrying (qid, e_vec).
@@ -362,8 +268,8 @@ def score_pair_sigs(pair_sigs: DataFrame, kb: DataFrame) -> DataFrame:
     Embeds each distinct norm_mention once per Arrow batch (further
     deduped in-batch; the gram memo makes repeats cheap), scores against
     the entity vector + alias string, and collapses alias variants to the
-    per-(mention, qid) max — the same value the row-level scorer +
-    groupBy-max produces.
+    per-(mention, qid) max — the same value the pandas oracle's
+    per-occurrence scoring + per-pair max produces.
 
     Design note (r4): a variant that moved the cosine JVM-side (embed
     per distinct norm in one stage, ``aggregate(zip_with(...))`` dot per
@@ -433,6 +339,18 @@ def rank_signature_scores(
         [F.desc("score"), F.asc("qid")], params.top_k)
 
 
+def signature_winners(
+    sig_scores: DataFrame, params: PipelineParams = PipelineParams()
+) -> DataFrame:
+    """Scored signatures -> each normalized text's rank-1 entity above
+    ``params.score_threshold``: (norm_mention, qid, score).  The
+    assignment half of the core; ``er_ids_plan`` encodes the winners into
+    ids, streaming joins them to each micro-batch's occurrences."""
+    return rank_signature_scores(sig_scores, params).where(
+        (F.col("rank") == 1) & (F.col("score") >= params.score_threshold)
+    ).select("norm_mention", "qid", "score")
+
+
 def _fanout_join(
     probe: DataFrame,
     build: DataFrame,
@@ -444,8 +362,8 @@ def _fanout_join(
     hot_threshold: int,
     probe_salt_cols: list[str],
 ) -> DataFrame:
-    """Strategy-aware occurrence fan-out join (shared by the string- and
-    id-keyed attach paths).
+    """Strategy-aware fan-out join of ``er_ids_plan``'s id-keyed attach
+    steps.
 
       broadcast — force a broadcast hash join (build side known small);
       salted    — shuffle join with explicit hot-key salting
@@ -478,36 +396,6 @@ def _fanout_join(
     raise ValueError(
         f"unknown attach strategy {strategy!r}; "
         "expected auto|broadcast|salted|shuffle")
-
-
-def attach_sig_scores(
-    mentions: DataFrame,
-    sig_scores: DataFrame,
-    strategy: str = "auto",
-    sig_rows: int | None = None,
-    broadcast_max_rows: int = 10_000_000,
-    salt_mod: int = 16,
-    hot_threshold: int = 1_000_000,
-) -> DataFrame:
-    """Fan signature scores (optionally pre-ranked — a ``rank`` column is
-    passed through) back out to mention occurrences by normalized text.
-
-    At 100 TB the distinct-signature table can reach billions of rows —
-    unconditionally broadcasting it (the round-1 default) is impossible;
-    see ``_fanout_join`` for the strategy ladder."""
-    joined = _fanout_join(
-        mentions, sig_scores, "norm_mention", strategy, sig_rows,
-        broadcast_max_rows, salt_mod, hot_threshold,
-        probe_salt_cols=["doc_id", "span_idx"])
-    cols = ["doc_id", "span_idx", "qid", "score"]
-    if "rank" in sig_scores.columns:
-        cols.append("rank")
-    return joined.select(*cols)
-
-
-# (attach_ranked_ids was removed in r4 — er_ids_plan builds its id-keyed
-# fan-out inline via _fanout_join, and keeping a second unused formulation
-# invited silent drift; ADVICE r3.)
 
 
 # ------------------------------------------------------- node id scheme
@@ -573,18 +461,19 @@ def mention_node(doc_id_col, span_idx_col, wide: bool = False) -> F.Column:
     ) + F.lit(_NODE_SPACE)
 
 
-# ----------------------------------------------- id-granular scale plan
+# ------------------------------------------------------------ the core
 
 def er_ids_plan(
     documents: DataFrame | None,
     kb: DataFrame,
     params: PipelineParams = PipelineParams(),
-    pin=lambda df: df.localCheckpoint(eager=True),
+    pin=None,
     mention_spans: DataFrame | None = None,
 ) -> DataFrame:
-    """The 100-TB-shaped ER plan: every per-occurrence computation that is
-    really a function of the mention TEXT runs at the coarsest granularity
-    that preserves semantics.
+    """The ER core: documents + prepared KB -> (doc_id, span_idx,
+    cluster_id), one row per mention span.  Every per-occurrence
+    computation that is really a function of the mention TEXT runs at the
+    coarsest granularity that preserves semantics.
 
     Round-2's plan normalized and blocking-keyed every occurrence (8.75M
     rows at the 1M-doc bench) and re-scanned + re-exploded the documents
@@ -601,9 +490,23 @@ def er_ids_plan(
       signatures x candidates: scoring (the python stage) and top-k.
 
     Everything fans back out through 64-bit-id hash joins; strings never
-    enter a per-occurrence shuffle.  ``pin`` materializes the two
-    multi-consumer frames (occurrences, ranked sigs chain inputs) —
-    localCheckpoint for benches, snapshots for the durable runner."""
+    enter a per-occurrence shuffle.
+
+    ``pin``: a ``Pin`` (default: the checkpoint policy), or any callable
+    ``(name, df) -> df``.  It materializes the multi-consumer frames
+    ``raws``, ``occurrences`` (unless ``mention_spans`` is given),
+    ``sig_scores`` and ``raw_best``; a ``cc_workdir`` attribute makes CC
+    iterations durable too.
+
+    Precondition: ``kb`` is unique per (block_key, norm_alias, qid), as
+    ``prepare_kb`` and ``derive_vocab_kb_df`` output is by their final
+    dedup (block_key is a function of norm_alias).  The blocking join runs
+    with ``assume_unique=True`` and would score a duplicated KB row twice;
+    the per-(norm_mention, qid) max in ``score_pair_sigs`` still collapses
+    the duplicates, so clusters are unchanged, but the signature table
+    grows."""
+    if pin is None:
+        pin = Pin()
     wide = params.wide_ids
     raw_id = (lambda: _wide_id("raw", "raw")) if wide else (
         lambda: F.xxhash64(F.lit("raw"), "raw"))
@@ -617,12 +520,7 @@ def er_ids_plan(
     if pre_extracted:
         spans = mention_spans.select("doc_id", "span_idx", "raw")
     else:
-        spans = (
-            documents.select(
-                "doc_id", F.posexplode("spans").alias("span_idx", "span"))
-            .where(F.col("span.kind") == "mention")
-            .select("doc_id", "span_idx", F.col("span.text").alias("raw"))
-        )
+        spans = explode_mentions(documents)
     # normalize at distinct-RAW granularity; key at distinct-NORM.
     # raws pins FIRST, from its own pass over the scan (the distinct
     # collapses to ~1 row per 9 occurrences before anything materializes)
@@ -631,30 +529,29 @@ def er_ids_plan(
     # re-read by each downstream consumer; dropping the string column
     # cut it ~40%.  Cost: one extra scan+explode of the (columnar,
     # compressed) documents source — cheap next to the reads it saves.
-    raws = pin(
+    raws = pin("raws", (
         spans.select("raw").distinct()
         .select(
             raw_id().alias("raw_id"),
             normalize_col(F.col("raw")).alias("norm_mention"),
         )
         .withColumn("nm_id", nm_id(F.col("norm_mention")))
-    )
+    ))
     occ = spans.select(
         "doc_id", "span_idx",
         mention_node(F.col("doc_id"), F.col("span_idx"), wide).alias("node"),
         raw_id().alias("raw_id"),
     )
     if not pre_extracted:
-        occ = pin(occ)
+        occ = pin("occurrences", occ)
     norms = (
         raws.select("norm_mention").distinct()
         .withColumn("block_key", block_key_col(F.col("norm_mention")))
     )
     # norms is distinct-by-construction and the KB side is unique per
     # (block_key, norm_alias, qid) — assume_unique skips two exchanges
-    sig_scores = pin(score_pair_sigs(
+    sig_scores = pin("sig_scores", score_pair_sigs(
         candidate_signatures(norms, kb, params, assume_unique=True), kb))
-    sig_ranked = rank_signature_scores(sig_scores, params)
     # The clustering stage consumes ONLY each signature's winning entity
     # (rank 1 above threshold) — so reduce to the winner AND encode its
     # entity node id while still at signature granularity (r4, r3 VERDICT
@@ -662,10 +559,9 @@ def er_ids_plan(
     # qid STRINGS + score + rank per occurrence — 10x the rows at ~5x the
     # bytes/row; now both fan-out joins move two 8-byte ids per row and
     # qid strings never leave the signature table).
+    winners = signature_winners(sig_scores, params)
     n_sigs = sig_scores.count()
-    best = sig_ranked.where(
-        (F.col("rank") == 1) & (F.col("score") >= params.score_threshold)
-    ).select(
+    best = winners.select(
         nm_id(F.col("norm_mention")).alias("nm_id"),
         entity_node(F.col("qid"), wide).alias("dst"),
     )
@@ -674,7 +570,7 @@ def er_ids_plan(
     # compose result is pinned so the occurrence fan-out picks
     # broadcast/salted from an EXACT build-side count (n_sigs upper-bounds
     # the first join's build side)
-    raw_best = pin(_fanout_join(
+    raw_best = pin("raw_best", _fanout_join(
         raws.select("raw_id", "nm_id"), best,
         "nm_id", "auto", n_sigs, 10_000_000, 16, 1_000_000,
         probe_salt_cols=["raw_id"],
@@ -692,7 +588,7 @@ def er_ids_plan(
     # unique), so CC skips its canonical dedup exchange (r6)
     comps = connected_components(
         edges, params.cc_max_iterations, emit_isolated=False,
-        edges_unique=True)
+        workdir=getattr(pin, "cc_workdir", None), edges_unique=True)
     return (
         occ.select("doc_id", "span_idx", "node")
         .join(comps, "node", "left")
@@ -702,76 +598,7 @@ def er_ids_plan(
         )
     )
 
-
-# ------------------------------------------------------------------ S5
-
-def rank_and_edges(
-    scored: DataFrame, params: PipelineParams = PipelineParams()
-) -> tuple[DataFrame, DataFrame]:
-    """S5: per-mention top-k + threshold -> (assignments, edges).
-
-    Deterministic order (score desc, qid asc) mirrors the reference's
-    first-index-wins argmax (`entity_disambiguation/eval.py:218`).
-    An alias may hit the same (mention, qid) via several alias rows —
-    collapse to the max score per pair first (cheap partial agg before the
-    window shuffle).
-    Edges are mention-node <-> entity-node (bipartite); node ids are
-    xxhash64 of the typed keys.  (At 10^12 mentions a 64-bit space expects
-    rare collisions — the production variant widens to a (hash_hi, hash_lo)
-    composite; same algorithm.)
-    """
-    per_pair = scored.groupBy("doc_id", "span_idx", "qid").agg(
-        F.max("score").alias("score")
-    )
-    ranked = top_k_per_group(
-        per_pair,
-        ["doc_id", "span_idx"],
-        [F.desc("score"), F.asc("qid")],
-        params.top_k,
-    )
-    assignments = ranked.where(
-        (F.col("rank") == 1) & (F.col("score") >= params.score_threshold)
-    ).select("doc_id", "span_idx", "qid", "score")
-    edges = assignments.select(
-        mention_node(F.col("doc_id"), F.col("span_idx"),
-                     params.wide_ids).alias("src"),
-        entity_node(F.col("qid"), params.wide_ids).alias("dst"),
-    )
-    return ranked, edges
-
-
-# ------------------------------------------------------------------ S6
-
-def cluster_mentions(
-    mentions: DataFrame,
-    edges: DataFrame,
-    params: PipelineParams = PipelineParams(),
-    workdir: str | None = None,
-) -> DataFrame:
-    """S6: connected components over mention<->entity edges -> cluster ids.
-
-    Every mention gets a cluster: matched mentions inherit their
-    component's min node id; unmatched mentions become singletons (their
-    own node hash).  Output: (doc_id, span_idx, cluster_id:long).
-    ``workdir`` makes each CC iteration durably resumable (see
-    ``connected_components``)."""
-    comps = connected_components(edges, params.cc_max_iterations,
-                                 workdir=workdir)
-    m = mentions.select(
-        "doc_id", "span_idx",
-        mention_node(F.col("doc_id"), F.col("span_idx"),
-                     params.wide_ids).alias("node"),
-    )
-    return (
-        m.join(comps, "node", "left")
-        .select(
-            "doc_id", "span_idx",
-            F.coalesce("component", "node").alias("cluster_id"),
-        )
-    )
-
-
-# ------------------------------------------------------------------ S7
+# ------------------------------------------------------- span invariant
 
 def verify_span_invariant(
     documents_in: DataFrame, documents_out: DataFrame
@@ -843,94 +670,37 @@ def run_pipeline(
     params: PipelineParams = PipelineParams(),
     resume: bool = True,
 ) -> dict:
-    """End-to-end run with optional checkpoint-resume.
+    """End-to-end run: ``prepare_kb`` + ``er_ids_plan``, with lineage
+    counters and the span-sequence invariant check.
 
     ``tables``: documents, kb_aliases, entity_vectors [, redirects,
-    wikimedia_filter].  When ``workdir`` is set, every stage snapshot +
-    manifest lands under it and completed stages are skipped on rerun
-    (manifest input-hash match).  Returns dict with the result DataFrames
-    and the counters.
-    """
-    params_hash = params.digest()
-    counters: dict[str, int] = {}
-    # stage hashes CHAIN: each stage's input_hash folds in the hashes of
-    # the stages/tables it actually consumes, so changing any upstream
-    # input invalidates every downstream snapshot
-    stage_hash: dict[str, str] = {}
+    wikimedia_filter].  With ``workdir``, every pinned frame (the KB, the
+    core's pins, the clusters) lands as a snapshot + manifest under it
+    (the snapshot ``Pin`` policy) and a rerun skips every snapshot whose
+    manifest matches.  All snapshots share one input hash that folds the
+    documents identity, the KB identity and ``params.digest()`` — coarser
+    than a per-stage chain (any input change recomputes everything), but
+    a stale snapshot is never reused.  Without ``workdir``, the
+    checkpoint policy.
 
-    def stage(name: str, make, input_ids: list[str]):
-        full_hash = hashlib.sha256(
-            ":".join([name, *input_ids, params_hash]).encode()
-        ).hexdigest()[:16]
-        stage_hash[name] = full_hash
-        if workdir is None:
-            # no snapshot dir: still cut lineage so multi-consumer stages
-            # (mentions feeds S2 and S6) execute once
-            return make().localCheckpoint(eager=True), None
-        path = os.path.join(workdir, name)
-        if resume and snapshot_is_valid(path, name, full_hash):
-            return read_snapshot(spark, path), path
-        df = make()
-        write_snapshot(df, path, name, full_hash)
-        return read_snapshot(spark, path), path
-
-    docs_id = _df_identity(tables["documents"])
-    kb_id = ":".join(
-        _df_identity(tables[t]) for t in ("kb_aliases", "entity_vectors")
-        if t in tables
-    ) + ":".join(
-        _df_identity(tables[t]) for t in ("redirects", "wikimedia_filter")
-        if tables.get(t) is not None
-    )
-
-    kb = prepare_kb(
-        tables["kb_aliases"], tables["entity_vectors"],
-        tables.get("redirects"), tables.get("wikimedia_filter"),
-    )
-
-    mentions, _ = stage(
-        "s1_mentions",
-        lambda: extract_mentions(tables["documents"], with_vec=False),
-        [docs_id])
-    counters["mentions_extracted"] = mentions.count()
-
-    sigs, _ = stage(
-        "s2_pair_sigs",
-        lambda: candidate_signatures(mentions, kb, params),
-        [stage_hash["s1_mentions"], kb_id])
-    counters["pairs_scored"] = sigs.count()   # distinct signatures scored
-
-    sig_scores, _ = stage(
-        "s4_sig_scores", lambda: score_pair_sigs(sigs, kb),
-        [stage_hash["s2_pair_sigs"]])
-
-    # rank at signature granularity, THEN fan out: identical rows to the
-    # old rank-after-attach (rank is occurrence-independent), but the
-    # window shuffles the tiny signature table, not every occurrence
-    ranked, _ = stage(
-        "s5_ranked",
-        lambda: attach_sig_scores(
-            mentions, rank_signature_scores(sig_scores, params),
-            sig_rows=counters["pairs_scored"]),
-        [stage_hash["s4_sig_scores"], stage_hash["s1_mentions"]])
-    counters["candidates_generated"] = ranked.count()
-
-    edges = ranked.where(
-        (F.col("rank") == 1) & (F.col("score") >= params.score_threshold)
-    ).select(
-        mention_node(F.col("doc_id"), F.col("span_idx")).alias("src"),
-        entity_node(F.col("qid")).alias("dst"),
-    )
-    counters["edges_kept"] = edges.count()
-
-    clusters, _ = stage(
-        "s6_clusters",
-        lambda: cluster_mentions(
-            mentions, edges, params,
-            workdir=(os.path.join(workdir, "cc_iters")
-                     if workdir is not None else None)),
-        [stage_hash["s5_ranked"], stage_hash["s1_mentions"]])
-    counters["n_clusters"] = clusters.select("cluster_id").distinct().count()
+    Returns ``{"clusters", "counters"}``; counters are the row count of
+    every pinned frame plus ``span_invariant_violations`` and, with a
+    workdir, land in ``_counters.json``."""
+    docs = tables["documents"]
+    kb_names = ("kb_aliases", "entity_vectors", "redirects",
+                "wikimedia_filter")
+    if workdir is None:
+        pin = Pin()
+    else:
+        input_hash = hashlib.sha256(":".join([
+            _df_identity(docs),
+            *(_df_identity(tables[t]) for t in kb_names
+              if tables.get(t) is not None),
+            params.digest(),
+        ]).encode()).hexdigest()[:16]
+        pin = Pin("snapshot", workdir, input_hash, resume)
+    kb = pin("kb", prepare_kb(*(tables.get(t) for t in kb_names)))
+    clusters = pin("clusters", lambda: er_ids_plan(docs, kb, params, pin=pin))
 
     # span invariant, against something that can actually violate it
     # (ADVICE r1: comparing the input to itself was vacuous):
@@ -939,30 +709,13 @@ def run_pipeline(
     #  - without: every cluster row must reference a real mention span of
     #    the input (doc_id, span_idx) — no orphaned/duplicated outputs.
     if workdir is not None:
-        docs_rt, _ = stage(
-            "s0_documents", lambda: tables["documents"], [docs_id])
-        bad = verify_span_invariant(tables["documents"], docs_rt)
+        bad = verify_span_invariant(docs, pin("s0_documents", docs))
     else:
-        valid_spans = (
-            tables["documents"]
-            .select("doc_id",
-                    F.posexplode("spans").alias("span_idx", "span"))
-            .where(F.col("span.kind") == "mention")
-            .select("doc_id", "span_idx")
-        )
         bad = clusters.join(
-            valid_spans, ["doc_id", "span_idx"], "left_anti").count()
-    counters["span_invariant_violations"] = bad
-
+            explode_mentions(docs), ["doc_id", "span_idx"], "left_anti"
+        ).count()
+    counters = {**pin.row_counts(), "span_invariant_violations": bad}
     if workdir is not None:
         with open(os.path.join(workdir, "_counters.json"), "w") as f:
             json.dump(counters, f, indent=1)
-
-    return {
-        "mentions": mentions,
-        "pair_sigs": sigs,
-        "sig_scores": sig_scores,
-        "ranked": ranked,
-        "clusters": clusters,
-        "counters": counters,
-    }
+    return {"clusters": clusters, "counters": counters}

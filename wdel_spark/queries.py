@@ -1012,6 +1012,7 @@ def q_er_streaming_clusters(spark, sf_dir):
     mentions grouped by token norm.  Batch/stream parity is therefore a
     value-hash gate, not just a pytest."""
     import os
+    import shutil
     import tempfile
 
     from wdel_spark.entry_pipeline import (
@@ -1022,46 +1023,53 @@ def q_er_streaming_clusters(spark, sf_dir):
 
     docs = derive_spans_documents(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="wdel_stream_query_")
-    docs_path = os.path.join(work, "docs")
-    docs.repartition(4).write.mode("overwrite").parquet(docs_path)
+    try:
+        docs_path = os.path.join(work, "docs")
+        docs.repartition(4).write.mode("overwrite").parquet(docs_path)
 
-    kb_aliases, entity_vectors = derive_vocab_kb(spark, docs)
-    kb = prepare_kb(kb_aliases, entity_vectors)
+        kb_aliases, entity_vectors = derive_vocab_kb(spark, docs)
+        kb = prepare_kb(kb_aliases, entity_vectors)
 
-    out = os.path.join(work, "assign")
-    ckpt = os.path.join(work, "ckpt")
-    run_streaming_assignments(spark, docs_path, kb, out, ckpt,
-                              max_files_per_trigger=2)
+        out = os.path.join(work, "assign")
+        ckpt = os.path.join(work, "ckpt")
+        run_streaming_assignments(spark, docs_path, kb, out, ckpt,
+                                  max_files_per_trigger=2)
 
-    assigns = spark.read.parquet(out)
-    member = F.concat_ws(":", "doc_id", F.col("span_idx").cast("string"))
-    # fold each micro-batch's edges into the persisted component state in
-    # batch order — same-entity mentions connect through a per-qid hub
-    # node, so later batches join clusters opened by earlier ones.  The
-    # batch-id loop is maintenance orchestration over a handful of ids,
-    # not data movement.
-    state = os.path.join(work, "cc_state")
-    batch_ids = sorted(
-        r[0] for r in assigns.select("_batch_id").distinct().collect())
-    if not batch_ids:  # ADVICE r5: comps stayed None -> AttributeError
-        raise RuntimeError(
-            "er_streaming_clusters: stream drain produced zero batches "
-            f"(sink {out!r} is empty)")
-    comps = None
-    for b in batch_ids:
-        edges = (
-            assigns.where(F.col("_batch_id") == b)
-            .select(member.alias("src"),
-                    F.concat(F.lit("Q|"), F.col("qid")).alias("dst"))
+        assigns = spark.read.parquet(out)
+        member = F.concat_ws(
+            ":", "doc_id", F.col("span_idx").cast("string"))
+        # fold each micro-batch's edges into the persisted component
+        # state in batch order — same-entity mentions connect through a
+        # per-qid hub node, so later batches join clusters opened by
+        # earlier ones.  The batch-id loop is maintenance orchestration
+        # over a handful of ids, not data movement.
+        state = os.path.join(work, "cc_state")
+        batch_ids = sorted(
+            r[0] for r in assigns.select("_batch_id").distinct().collect())
+        if not batch_ids:  # ADVICE r5: comps stayed None -> AttributeError
+            raise RuntimeError(
+                "er_streaming_clusters: stream drain produced zero batches "
+                f"(sink {out!r} is empty)")
+        comps = None
+        for b in batch_ids:
+            edges = (
+                assigns.where(F.col("_batch_id") == b)
+                .select(member.alias("src"),
+                        F.concat(F.lit("Q|"), F.col("qid")).alias("dst"))
+            )
+            comps = update_clusters(spark, edges, state)
+        clusters = comps.where(~F.col("node").startswith("Q|"))
+        # the result reads the work dir's state files: materialize the
+        # (small) table before the dir goes
+        return (
+            clusters.groupBy("component")
+            .agg(F.min("node").alias("canonical_member"),
+                 F.count("*").alias("n_members"))
+            .select("canonical_member", "n_members")
+            .localCheckpoint(eager=True)
         )
-        comps = update_clusters(spark, edges, state)
-    clusters = comps.where(~F.col("node").startswith("Q|"))
-    return (
-        clusters.groupBy("component")
-        .agg(F.min("node").alias("canonical_member"),
-             F.count("*").alias("n_members"))
-        .select("canonical_member", "n_members")
-    )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def q_grouped_renest(spark, sf_dir):
@@ -1352,7 +1360,7 @@ def q_er_recall_at_k(spark, sf_dir):
     # rank-join/groupBy chain, which shuffled |occurrences| x k rows to
     # produce a 4-row table.
     norm_counts, ranked_sigs = er_ranked_over_testdata(
-        spark, sf_dir, decoys=True, sig_level=True)
+        spark, sf_dir, decoys=True)
     gold_qid = F.concat(
         F.lit("T"), F.substring(F.md5("norm_mention"), 1, 12))
     rg_per_norm = (

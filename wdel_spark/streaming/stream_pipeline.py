@@ -2,9 +2,13 @@
 
 The reference serves requests through Flask micro-batches
 (`/root/reference/src/pipeline.py:263-338`); the Spark-native analog is a
-``readStream`` of document files driven through the SAME stage functions
-via ``foreachBatch`` — one code path for batch and streaming.  The sink is
-made idempotent by writing each micro-batch to its own
+``readStream`` of document files whose ``foreachBatch`` runs the
+assignment half of the one ER core (``plans.pipeline``): normalize the
+batch's distinct mention texts, block and score their signatures
+(``candidate_signatures`` + ``score_pair_sigs``), keep each text's
+rank-1 winner above threshold (``signature_winners``), and join the
+batch's mention occurrences to the winners on the normalized text.  The
+sink is made idempotent by writing each micro-batch to its own
 ``_batch_id=<id>`` partition with dynamic partition OVERWRITE: a batch
 retried after a partial or completed write replaces its own partition
 instead of appending duplicates, which upgrades foreachBatch's native
@@ -14,22 +18,23 @@ Clustering stays a periodic batch job, but INCREMENTAL: iterative CC is
 not expressible inside a streaming trigger, so ``update_clusters``
 merges each new edge batch into the persisted (node, component) state via
 ``operators.cc.incremental_components`` — state is O(live nodes), never
-the full edge log (round-1's full re-cluster placeholder is gone).
+the full edge log.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from wdel_spark.datagen.corpus import DOCUMENTS_SCHEMA
+from wdel_spark.functions.textnorm import block_key_col, normalize_col
 from wdel_spark.operators.cc import incremental_components
 from wdel_spark.plans.pipeline import (
     PipelineParams,
-    extract_mentions,
-    block_candidates,
-    score_pairs,
+    candidate_signatures,
+    explode_mentions,
+    score_pair_sigs,
+    signature_winners,
 )
-from pyspark.sql import functions as F
 
 
 def run_streaming_assignments(
@@ -42,10 +47,12 @@ def run_streaming_assignments(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
-    """Stream documents -> per-mention entity assignments (parquet sink).
+    """Stream documents -> per-mention entity assignments
+    (doc_id, span_idx, qid, score) in a parquet sink.
 
-    ``kb``: prepared alias table (prepare_kb output).  Each micro-batch runs
-    extract -> block -> score -> top-1 threshold; results append to
+    ``kb``: prepared alias table (``prepare_kb`` output, unique per
+    (block_key, norm_alias, qid) — see ``er_ids_plan``).  Each
+    micro-batch runs the core's assignment half; results land in
     ``output_path``.  ``available_now`` drains existing files then stops
     (test/backfill mode); otherwise runs continuously.
     ``max_files_per_trigger`` bounds each micro-batch (with availableNow
@@ -58,18 +65,17 @@ def run_streaming_assignments(
     stream = reader.parquet(input_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        mentions = extract_mentions(batch_df)
-        cands = block_candidates(mentions, kb, params)
-        scored = score_pairs(cands)
-        per_pair = scored.groupBy("doc_id", "span_idx", "qid").agg(
-            F.max("score").alias("score"))
-        from wdel_spark.operators.topk import top_k_per_group
-
-        ranked = top_k_per_group(
-            per_pair, ["doc_id", "span_idx"],
-            [F.desc("score"), F.asc("qid")], 1)
+        spans = explode_mentions(batch_df)
+        raws = spans.select("raw").distinct().withColumn(
+            "norm_mention", normalize_col(F.col("raw")))
+        norms = raws.select("norm_mention").distinct().withColumn(
+            "block_key", block_key_col(F.col("norm_mention")))
+        winners = signature_winners(score_pair_sigs(
+            candidate_signatures(norms, kb, params, assume_unique=True),
+            kb), params)
         (
-            ranked.where(F.col("score") >= params.score_threshold)
+            spans.join(raws, "raw")
+            .join(winners, "norm_mention")
             .select("doc_id", "span_idx", "qid", "score")
             .withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
